@@ -18,8 +18,6 @@ synthetic corpus, the scenario dials, and the oracles live here."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,6 +34,7 @@ from temporalvault_spark.operators.index_common import (
     with_bucket_skew,
 )
 from temporalvault_spark.registry import query
+from temporalvault_spark.staging import artifact, artifact_path
 
 _FAMILY = Band64Index("afp", "aud_id", "aud")
 
@@ -99,28 +98,18 @@ def rebuild_afp_index_if_grown(
 # near-dups, so the oracle rows are non-trivial by construction (the
 # phash_index scenario, kernel swapped).
 
-_STAGED_AFP_INDEX: dict[tuple, str] = {}
-
-
 def stage_afp_index(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
     """Build (once per application + corpus fingerprint) the persisted
     audio band index over the base clips (variant != 0), deriving from
     the staged fingerprint table — no re-decode."""
-    from temporalvault_spark.operators.llm import _corpus_key
-    from temporalvault_spark.staging import stage_dir
 
-    key = _corpus_key(spark, sf_dir)
-    path = _STAGED_AFP_INDEX.get(key)
-    if path is None or force or not os.path.isdir(path):
-        if path is None or not os.path.isdir(path):
-            path = os.path.join(stage_dir(spark, "afp_idx"), "index")
+    def build(tmp: str) -> None:
         hashes = spark.read.parquet(stage_afp(spark, sf_dir))
-        base = hashes.filter(
-            F.expr(f"(aud_id DIV {AUD_EVERY}) % {VARIANT_GROUP} <> 0")
+        build_afp_index(
+            hashes.filter(F.expr(f"(aud_id DIV {AUD_EVERY}) % {VARIANT_GROUP} <> 0")), tmp
         )
-        build_afp_index(base, path)
-        _STAGED_AFP_INDEX[key] = path
-    return path
+
+    return artifact(spark, "afp_idx", sf_dir, ("documents",), build, force)
 
 
 _AFP_IDX_BUILD_ORACLE = f"""WITH {_AFP_CTES},
@@ -210,8 +199,6 @@ def q_afp_index_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and the full per-(band, bkt) row counts.
 AFP_REBUILD_WT = 40
 
-_AFP_REBUILD_DIR: dict[tuple, str] = {}
-
 _AFP_REBUILD_ORACLE = f"""WITH {_AFP_CTES},
     w AS (SELECT {Band64Index.bkt_chars_case_sql("COUNT(*)", AFP_REBUILD_WT)} AS c
           FROM aids),
@@ -236,15 +223,8 @@ def q_afp_index_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     width decision + counts prove rebuild-after-growth is byte-identical
     to never having grown. With this, all FOUR modalities' maintenance
     cycles are value-hash-oracled."""
-    from temporalvault_spark.operators.llm import _corpus_key
-    from temporalvault_spark.staging import stage_dir
-
     hashes = spark.read.parquet(stage_afp(spark, sf_dir))
-    key = _corpus_key(spark, sf_dir)
-    path = _AFP_REBUILD_DIR.get(key)
-    if path is None or not os.path.isdir(os.path.dirname(path)):
-        path = os.path.join(stage_dir(spark, "afp_rebuild"), "index")
-        _AFP_REBUILD_DIR[key] = path
+    path = artifact_path(spark, "afp_rebuild", sf_dir, ("documents",))
     grp = F.expr(f"(aud_id DIV {AUD_EVERY}) % {VARIANT_GROUP}")
     build_afp_index(hashes.filter(grp != 0), path)
     build_afp_index(hashes.filter(grp == 0), path, append=True)

@@ -44,7 +44,6 @@ from __future__ import annotations
 
 import hashlib
 import io
-import os
 import struct
 import wave
 from collections.abc import Iterator
@@ -58,6 +57,7 @@ from temporalvault_spark.catalog import load_catalog
 from temporalvault_spark.operators.dedup_cluster import connected_components
 from temporalvault_spark.operators.phash import banded_hamming_pairs
 from temporalvault_spark.registry import query
+from temporalvault_spark.staging import artifact
 
 AFP_SAMPLES = 1024  # synthesized clip length (samples)
 AFP_FRAMES = 64  # envelope frames -> 64 bits
@@ -278,26 +278,18 @@ def afp_hamming_pairs(
 
 # --- staged fingerprint table (one decode+fingerprint pass per session) ------
 
-_STAGED_AFP: dict[tuple, str] = {}
-
-
 def stage_afp(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
     """Materialize the (aud_id, hash64) table once per application + corpus
     fingerprint (the stage_phash contract): synthesize the audio corpus,
     decode+fingerprint it, persist the slim frame. Consumers pay a parquet
     re-scan, never a re-decode."""
-    from temporalvault_spark.operators.llm import _corpus_key
-    from temporalvault_spark.staging import stage_dir
-
-    key = _corpus_key(spark, sf_dir)
-    path = _STAGED_AFP.get(key)
-    if path is None or force or not os.path.isdir(path):
-        if path is None or not os.path.isdir(path):
-            path = os.path.join(stage_dir(spark, "afp_stage"), "fps")
-        docs = load_catalog(spark, sf_dir).table("documents")
-        afp_frame(synth_wav_audio(docs)).write.mode("overwrite").parquet(path)
-        _STAGED_AFP[key] = path
-    return path
+    return artifact(
+        spark, "afp_stage", sf_dir, ("documents",),
+        lambda tmp: afp_frame(synth_wav_audio(
+            load_catalog(spark, sf_dir).table("documents")
+        )).write.parquet(tmp),
+        force,
+    )
 
 
 # --- oracles: the full sample->fingerprint pipeline replayed in SQL ----------

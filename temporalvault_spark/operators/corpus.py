@@ -1304,9 +1304,9 @@ def _dsir_ratio_literals(spark: SparkSession, sf_dir: str) -> list[float]:
     boundary-margin assertion."""
     import math
 
-    from temporalvault_spark.operators.llm import _corpus_key
+    from temporalvault_spark.staging import fingerprint
 
-    key = _corpus_key(spark, sf_dir)
+    key = fingerprint(spark, sf_dir, ("documents",))
     cached = _DSIR_RATIO_CACHE.get(key)
     if cached is not None:
         return cached
@@ -1700,9 +1700,9 @@ def quality_classifier_weights(docs: DataFrame) -> list[float]:
 
 def _qc_weight_literals(spark: SparkSession, sf_dir: str) -> list[float]:
     """Per-corpus cached training pass (the _dsir_ratio_literals cadence)."""
-    from temporalvault_spark.operators.llm import _corpus_key
+    from temporalvault_spark.staging import fingerprint
 
-    key = _corpus_key(spark, sf_dir)
+    key = fingerprint(spark, sf_dir, ("documents",))
     cached = _QC_WEIGHT_CACHE.get(key)
     if cached is not None:
         return cached

@@ -206,16 +206,19 @@ def near_dup_components(docs: DataFrame, pairs: DataFrame | None = None) -> Data
     and dedup_near_apply both call it). ``pairs`` (doc_a, doc_b, ...) lets a
     caller hand in the STAGED pair artifact (llm.staged_ngram_pairs) so the
     LSH pipeline runs once per session instead of once per consumer; when
-    omitted the self-contained pipeline runs from ``docs``."""
+    omitted the self-contained pipeline runs from ``docs``.
+
+    Contract for a supplied ``pairs``: it must already be MATERIALIZED —
+    parquet-backed (a staged artifact) or checkpointed. It is handed to the
+    solver with ``pre_materialized=True``, which skips the defensive
+    checkpoint of the edge list, so a lazy pipeline would be re-run by
+    every job the solver launches."""
     if pairs is None:
         return connected_components(
             ngram_jaccard_pairs(docs).select(
                 F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
             )
         )
-    # a handed-in pair frame is the staged PARQUET artifact (every in-repo
-    # caller) — already materialized, so the components solver can skip its
-    # defensive eager checkpoint of the edge list
     edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     return connected_components(edges, pre_materialized=True)
 

@@ -31,13 +31,12 @@ loop, so the formulas cannot drift."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from temporalvault_spark.catalog import load_catalog
 from temporalvault_spark.registry import query
+from temporalvault_spark.staging import artifact
 
 PR_ITER = 5
 PR_DAMP = 0.85
@@ -245,53 +244,23 @@ def _pagerank_oracle() -> str:
 # --- staged edge artifact ---------------------------------------------------
 # The edge frame (orders ⋈ lineitem, distinct pairs + degrees: ~1.2M rows at
 # sf0.1) is the expensive part of the graph pipeline; every graph consumer in
-# a session derives from the same frame. Same per-session staging contract as
-# llm.py's signature/pair stages: keyed on (appId, dir, source mtimes+sizes)
-# so a rewritten source within one application restages.
+# a session derives from the same frame. A staging.artifact() over orders +
+# lineitem, so a rewritten source within one application restages.
 
-_EdgeKey = tuple[str, str, tuple]
-_STAGED_EDGES: dict[_EdgeKey, str] = {}
-# Read-back frames, re-partitioned on dst and checkpointed once per session:
-# a plain parquet read LOSES the writer's hash-partitioning (no bucketBy
-# metadata), so without this cache every PageRank iteration would pay an
-# edge-sized exchange for the groupBy(dst) — the cache restores the
-# in-memory path's zero-exchange-per-iteration property at the cost of ONE
-# repartition on first consumption (flagged by the round-7 advice).
-_STAGED_EDGES_DF: dict[_EdgeKey, DataFrame] = {}
-
-
-def _edges_key(spark: SparkSession, sf_dir: str) -> _EdgeKey:
-    sigs = []
-    for t in ("orders", "lineitem"):
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        mtime_ns, size = 0, 0
-        if os.path.isdir(p):
-            for root, _dirs, files in os.walk(p):
-                for fn in files:
-                    st = os.stat(os.path.join(root, fn))
-                    mtime_ns = max(mtime_ns, st.st_mtime_ns)
-                    size += st.st_size
-        elif os.path.exists(p):
-            st = os.stat(p)
-            mtime_ns, size = st.st_mtime_ns, st.st_size
-        sigs.append((t, mtime_ns, size))
-    return (
-        spark.sparkContext.applicationId,
-        os.path.normpath(sf_dir),
-        tuple(sigs),
-    )
+# Read-back frames by artifact path, checkpointed once per session: a plain
+# parquet read LOSES the writer's hash-partitioning (no bucketBy metadata),
+# so without this cache every PageRank iteration would pay an edge-sized
+# exchange for the groupBy(dst) — the cache restores the in-memory path's
+# zero-exchange-per-iteration property at the cost of ONE repartition on
+# first consumption (flagged by the round-7 advice).
+_EDGES_READBACK: dict[str, DataFrame] = {}
 
 
 def stage_trade_edges(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
     """Materialize the degree-annotated symmetric edge frame (src, dst, deg)
     once per session."""
-    from temporalvault_spark.staging import stage_dir
 
-    key = _edges_key(spark, sf_dir)
-    path = _STAGED_EDGES.get(key)
-    if path is None or force or not os.path.isdir(path):
-        if path is None or not os.path.isdir(path):
-            path = os.path.join(stage_dir(spark, "edges_stage"), "edges")
+    def build(tmp: str) -> None:
         edges = trade_edges(spark, sf_dir)
         deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
         # deg is NODE-sized (the same broadcast regime as the rank state in
@@ -312,36 +281,34 @@ def stage_trade_edges(spark: SparkSession, sf_dir: str, force: bool = False) -> 
         (
             edges.join(F.broadcast(deg), "src")
             .repartition(_edge_parts(edges))
-            .write.mode("overwrite")
-            .parquet(path)
+            .write.parquet(tmp)
         )
-        _STAGED_EDGES[key] = path
-        # Pop the read-back frame cache on every (re)write (r14 advice): a
-        # still-LAZY cached frame holds a scan of the parquet files this
-        # overwrite just deleted — its first later action would hit
+        # Drop the read-back frame cache on every (re)build (r14 advice): a
+        # still-LAZY cached frame holds a scan of the files the swap is
+        # about to delete — its first later action would hit
         # FileNotFoundException. Re-creating the frame is one cheap re-read
         # of the node-sized artifact; rows are byte-equivalent either way
         # (deterministic pipeline over the same inputs).
-        _STAGED_EDGES_DF.pop(key, None)
-    return path
+        _EDGES_READBACK.clear()
+
+    return artifact(spark, "edges_stage", sf_dir, ("orders", "lineitem"), build, force)
 
 
 def staged_trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(src, dst, deg) from the staged artifact — stages on first use.
 
     The returned frame is localCheckpointed lazily (once per session, see
-    _STAGED_EDGES_DF) so PageRank's ~7 accesses per run read cached blocks
+    _EDGES_READBACK) so PageRank's ~7 accesses per run read cached blocks
     instead of re-decoding the parquet. Scan parallelism comes from the
     artifact's FILE LAYOUT (stage_trade_edges writes _edge_parts files, one
     scan partition each at these sizes) — no per-session repartition
     needed; see the write-side comment for the r14 regression this
     restores."""
-    key = _edges_key(spark, sf_dir)
     path = stage_trade_edges(spark, sf_dir)
-    df = _STAGED_EDGES_DF.get(key)
+    df = _EDGES_READBACK.get(path)
     if df is None:
         df = spark.read.parquet(path).localCheckpoint(eager=False)
-        _STAGED_EDGES_DF[key] = df
+        _EDGES_READBACK[path] = df
     return df
 
 

@@ -14,19 +14,20 @@ there), so the mechanical parts live HERE once:
   (probes on a pure legacy layout still work: the explicit read schemas
   null-fill the missing ingest column); the remedy is a rebuild, which
   writes the current layout;
-- ``atomic_swap_rebuild``: build into a sibling, rename-swap, drop the old
-  — probes never see a half-rebuilt index.
+- ``atomic_swap_rebuild`` (defined in ``staging``, shared with every
+  staged artifact): build into a sibling, rename-swap, drop the old —
+  probes never see a half-rebuilt index.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-from collections.abc import Callable
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from temporalvault_spark.staging import adopt_swapped, atomic_swap_rebuild  # noqa: F401
 
 
 def resolve_write_mode(
@@ -54,40 +55,6 @@ def resolve_write_mode(
 # keying on (path, mtime) leaked one stale entry per rebuild for the life
 # of the session).
 _META_ROW_CACHE: dict[str, tuple[int, dict]] = {}
-
-
-def adopt_swapped(path: str) -> bool:
-    """Adopt-on-read recovery for the ``atomic_swap_rebuild`` crash window:
-    the swap is two renames (``path`` -> ``path.old`` then
-    ``path.rebuild`` -> ``path``), and a crash BETWEEN them leaves no index
-    at ``path`` while the complete old index sits untouched at
-    ``path.old``. Without recovery the streaming gates' ``index_ready``
-    would read that as no-index and silently cold-rebuild from a single
-    batch — permanently losing dedup coverage against the historic corpus.
-    So every sidecar read first checks for exactly that signature (nothing
-    at ``path``, a directory at ``path.old``) and renames the old index
-    back. A leftover ``path.old`` NEXT TO a live index (crash after the
-    second rename, before the cleanup rmtree) is NOT adopted — the new
-    index won — and is removed here (completing the crashed cleanup):
-    letting it linger would let a LATER external deletion of the live
-    index silently resurrect the stale pre-rebuild index instead of
-    tripping the gates' markers-without-index guard. Cross-PROCESS races
-    (a reader adopting while a live rebuild sits between its two renames)
-    are handled on the writer side: atomic_swap_rebuild retries its second
-    rename after re-parking an adopted directory."""
-    old = f"{path}.old"
-    if os.path.isdir(old):
-        if not os.path.exists(path):
-            try:
-                os.rename(old, path)
-                return True
-            except OSError:
-                pass  # racing reader already adopted it — path now exists
-        else:
-            # stale .old beside a live index: finish the crashed rmtree so
-            # it can never be adopted after a future deletion of path
-            shutil.rmtree(old, ignore_errors=True)
-    return False
 
 
 def meta_sidecar_exists(path: str) -> bool:
@@ -212,41 +179,6 @@ def assert_ingest_layout(path: str, family: str) -> None:
                 "(rebuild-if-grown reads legacy layouts and writes the "
                 "current one)"
             )
-
-
-def atomic_swap_rebuild(path: str, build_to: Callable[[str], None]) -> None:
-    """Build a replacement index into a SIBLING directory and rename-swap
-    it in (the rollback_state swap precedent): probes racing the rebuild
-    see either the old index or the new one, never a mixture. The swap
-    itself is two renames, so a crash exactly between them leaves no index
-    at ``path`` and the complete old one at ``path.old`` — that window is
-    repaired by ``adopt_swapped``, which every sidecar read (and this
-    function's own entry) runs first, so the next touch of the index
-    renames the old one back instead of reading it as vanished."""
-    tmp_new, tmp_old = f"{path}.rebuild", f"{path}.old"
-    adopt_swapped(path)  # a crashed prior swap: restore before rebuilding
-    shutil.rmtree(tmp_new, ignore_errors=True)
-    shutil.rmtree(tmp_old, ignore_errors=True)
-    build_to(tmp_new)
-    os.rename(path, tmp_old)
-    # a cross-process reader can adopt tmp_old back into path between the
-    # two renames (adopt_swapped cannot tell that crash signature from a
-    # LIVE swap); re-park it and retry — each retry empties path again, so
-    # this converges unless readers adopt continuously (bounded attempts,
-    # then raise rather than spin)
-    for attempt in range(5):
-        try:
-            os.rename(tmp_new, path)
-            break
-        except OSError:
-            os.rename(path, tmp_old)
-    else:
-        raise OSError(
-            f"atomic_swap_rebuild: could not swap {path} after 5 attempts — "
-            "a racing reader keeps adopting the old index; serialize "
-            "rebuilds against probes (external lock) and retry"
-        )
-    shutil.rmtree(tmp_old)
 
 
 # --- hot-bucket skew (round-12 verdict #5) ------------------------------------

@@ -341,8 +341,6 @@ def rebuild_ivf_index_if_grown(
 # ivfpq scenario's first-K codebook — both read those exact rows; a plain
 # %10 split would drop vec_id 0 and 10 and leave the centroid set short).
 
-import os
-
 from temporalvault_spark.operators.similarity import (
     EMB_STRICT_WHERE,
     EMB_TARGET_CLUSTER,
@@ -350,6 +348,7 @@ from temporalvault_spark.operators.similarity import (
     _emb,
 )
 from temporalvault_spark.registry import query
+from temporalvault_spark.staging import artifact, artifact_path
 
 IVF_BASE_DUCK = f"(vec_id < {N_CENTROIDS} OR vec_id % 10 <> 0)"
 
@@ -408,24 +407,15 @@ _PER_CENTROID_SELECT = """SELECT CAST(centroid_id AS BIGINT) AS centroid_id,
            ROUND(AVG(label), 6) AS avg_label
     FROM assign GROUP BY 1"""
 
-_STAGED_IVF_INDEX: dict[tuple, str] = {}
-
-
 def stage_ivf_index(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
     """Build (once per application + embeddings fingerprint — the
     stage_rp_index contract) the persisted IVF index over the base corpus.
     Returns the index path."""
-    from temporalvault_spark.operators.llm import _corpus_key
-    from temporalvault_spark.staging import stage_dir
-
-    key = _corpus_key(spark, sf_dir, table="embeddings")
-    path = _STAGED_IVF_INDEX.get(key)
-    if path is None or force or not os.path.isdir(path):
-        if path is None or not os.path.isdir(path):
-            path = os.path.join(stage_dir(spark, "ivf_idx"), "index")
-        build_ivf_index(_ivf_base(spark, sf_dir), path)
-        _STAGED_IVF_INDEX[key] = path
-    return path
+    return artifact(
+        spark, "ivf_idx", sf_dir, ("embeddings",),
+        lambda tmp: build_ivf_index(_ivf_base(spark, sf_dir), tmp),
+        force,
+    )
 
 
 _BUILD_ORACLE = f"""WITH eall AS (
@@ -556,8 +546,6 @@ def q_ivf_index_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lands value-identical to never having grown at all.
 IVF_REBUILD_GROWTH_FACTOR = 1.05
 
-_IVF_REBUILD_DIR: dict[tuple, str] = {}
-
 _REBUILD_ORACLE = f"""WITH e AS (
         SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings {EMB_STRICT_WHERE}),
     {_ivf_assign_duck("e")}
@@ -574,14 +562,7 @@ def q_ivf_index_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returned per-centroid membership comes from the REBUILT on-disk index;
     the oracle's fresh-build replay over the union value-checks that
     retrain-after-growth is value-identical to a from-scratch build."""
-    from temporalvault_spark.operators.llm import _corpus_key
-    from temporalvault_spark.staging import stage_dir
-
-    key = _corpus_key(spark, sf_dir, table="embeddings")
-    path = _IVF_REBUILD_DIR.get(key)
-    if path is None or not os.path.isdir(os.path.dirname(path)):
-        path = os.path.join(stage_dir(spark, "ivf_rebuild"), "index")
-        _IVF_REBUILD_DIR[key] = path
+    path = artifact_path(spark, "ivf_rebuild", sf_dir, ("embeddings",))
     build_ivf_index(_ivf_base(spark, sf_dir), path)
     append_to_ivf_index(_ivf_batch(spark, sf_dir), path)
     rebuild_ivf_index_if_grown(

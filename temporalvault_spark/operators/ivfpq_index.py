@@ -232,8 +232,6 @@ def append_to_ivfpq_index(emb: DataFrame, path: str) -> None:
 # BOTH quantizers: the centroid set (at the union's adaptive k) and the
 # PQ codebook (retrained over the union).
 
-import os
-
 from temporalvault_spark.operators.ivf_index import (
     IVF_BASE_DUCK,
     IVF_GROWTH_FACTOR,
@@ -243,6 +241,7 @@ from temporalvault_spark.operators.ivf_index import (
 from temporalvault_spark.operators.pq import _PQ_CODES_DUCK, _PQ_WHERE_DUCK
 from temporalvault_spark.operators.similarity import N_CENTROIDS
 from temporalvault_spark.registry import query
+from temporalvault_spark.staging import artifact, artifact_path
 
 
 # THE one probe implementation lives in ivf_index.centroid_index_occupancy
@@ -328,23 +327,14 @@ _PER_CENTROID_CODES_SELECT = """cs AS (
            CAST(SUM(cs.code_sum) AS BIGINT) AS code_sum
     FROM assign a JOIN cs USING (vec_id) GROUP BY 1"""
 
-_STAGED_IVFPQ_INDEX: dict[tuple, str] = {}
-
-
 def stage_ivfpq_index(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
     """Build (once per application + embeddings fingerprint) the persisted
     IVF-PQ index over the base corpus. Returns the index path."""
-    from temporalvault_spark.operators.llm import _corpus_key
-    from temporalvault_spark.staging import stage_dir
-
-    key = _corpus_key(spark, sf_dir, table="embeddings")
-    path = _STAGED_IVFPQ_INDEX.get(key)
-    if path is None or force or not os.path.isdir(path):
-        if path is None or not os.path.isdir(path):
-            path = os.path.join(stage_dir(spark, "ivfpq_idx"), "index")
-        build_ivfpq_index(_pq_base(spark, sf_dir), path)
-        _STAGED_IVFPQ_INDEX[key] = path
-    return path
+    return artifact(
+        spark, "ivfpq_idx", sf_dir, ("embeddings",),
+        lambda tmp: build_ivfpq_index(_pq_base(spark, sf_dir), tmp),
+        force,
+    )
 
 
 _BUILD_ORACLE = f"""WITH eall AS (
@@ -382,8 +372,6 @@ def q_ivfpq_index_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Same tightened dial as the ivf rebuild scenario: the appended tenth is
 # ~11% growth, so 1.05 trips at every graded scale factor while the k
 # floor keeps the assignment on the exact (oracle-replayable) path.
-_IVFPQ_REBUILD_DIR: dict[tuple, str] = {}
-
 _REBUILD_ORACLE = f"""WITH e AS (
         SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings {_PQ_WHERE_DUCK}),
     {_ivf_assign_duck("e")},
@@ -401,14 +389,8 @@ def q_ivfpq_index_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's fresh replay over the union value-checks that
     retrain-after-growth is value-identical to a from-scratch build."""
     from temporalvault_spark.operators.ivf_index import IVF_REBUILD_GROWTH_FACTOR
-    from temporalvault_spark.operators.llm import _corpus_key
-    from temporalvault_spark.staging import stage_dir
 
-    key = _corpus_key(spark, sf_dir, table="embeddings")
-    path = _IVFPQ_REBUILD_DIR.get(key)
-    if path is None or not os.path.isdir(os.path.dirname(path)):
-        path = os.path.join(stage_dir(spark, "ivfpq_rebuild"), "index")
-        _IVFPQ_REBUILD_DIR[key] = path
+    path = artifact_path(spark, "ivfpq_rebuild", sf_dir, ("embeddings",))
     build_ivfpq_index(_pq_base(spark, sf_dir), path)
     append_to_ivfpq_index(_pq_batch(spark, sf_dir), path)
     rebuild_ivfpq_index_if_grown(

@@ -14,13 +14,12 @@ Design rules for 100 TB corpora:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from temporalvault_spark.catalog import load_catalog
 from temporalvault_spark.registry import query
+from temporalvault_spark.staging import artifact
 
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
 # heuristic. Fixed constants — part of the operator's contract.
@@ -138,47 +137,13 @@ def _q_dedup_ngram_jaccard_decorated(spark: SparkSession, sf_dir: str) -> DataFr
 #      exact-verify output, feeding four consumers (dedup_ngram_jaccard,
 #      dedup_components, dedup_near_apply, split_leakage_check). Pairs ≪
 #      docs by construction, so the artifact is tiny relative to the corpus.
-# Both caches are keyed per (Spark application, corpus FINGERPRINT) — path
-# plus documents.parquet (mtime_ns, size) — so rewriting the corpus at the
-# same path within one application re-stages instead of silently serving
-# stale artifacts (an immutability assumption the previous path-only key
-# left implicit). Consumers read the parquet artifacts, so the corpus is
-# tokenized/hashed exactly once per session no matter how many downstream
-# queries run; everything is md5-deterministic, so each consumer's
-# self-contained DuckDB oracle still replays the staged values bit-for-bit.
-
-_CorpusKey = tuple[str, str, str, int, int]
-
-_STAGED_SIGS: dict[_CorpusKey, str] = {}
-_STAGED_PAIRS: dict[_CorpusKey, str] = {}
-
-
-def _corpus_key(
-    spark: SparkSession, sf_dir: str, table: str = "documents"
-) -> _CorpusKey:
-    """Cache key = (appId, normalized dir, table, <table>.parquet mtime_ns,
-    size). A directory-style parquet table folds every data file's (mtime,
-    size) into the fingerprint. ``table`` lets embedding-staged operators
-    (rp_lsh, the RP index) share the same freshness contract over
-    embeddings.parquet."""
-    p = os.path.join(sf_dir, f"{table}.parquet")
-    mtime_ns, size = 0, 0
-    if os.path.isdir(p):
-        for root, _dirs, files in os.walk(p):
-            for fn in files:
-                st = os.stat(os.path.join(root, fn))
-                mtime_ns = max(mtime_ns, st.st_mtime_ns)
-                size += st.st_size
-    else:
-        st = os.stat(p)
-        mtime_ns, size = st.st_mtime_ns, st.st_size
-    return (
-        spark.sparkContext.applicationId,
-        os.path.normpath(sf_dir),
-        table,
-        mtime_ns,
-        size,
-    )
+# Both are staging.artifact()s keyed on the corpus fingerprint, so
+# rewriting documents.parquet within one application re-stages instead of
+# serving stale artifacts. Consumers read the parquet artifacts, so the
+# corpus is tokenized/hashed exactly once per session no matter how many
+# downstream queries run; everything is md5-deterministic, so each
+# consumer's self-contained DuckDB oracle still replays the staged values
+# bit-for-bit.
 
 
 def stage_shingle_signatures(
@@ -189,16 +154,11 @@ def stage_shingle_signatures(
     fingerprint. ``force`` re-runs the pass, which the bench uses so the
     stage cost stays measured instead of hidden. Returns the artifact
     path."""
-    from temporalvault_spark.staging import stage_dir
-
-    key = _corpus_key(spark, sf_dir)
-    path = _STAGED_SIGS.get(key)
-    if path is None or force or not os.path.isdir(path):
-        if path is None or not os.path.isdir(path):
-            path = os.path.join(stage_dir(spark, "sig_stage"), "signatures")
-        shingle_signatures(_docs(spark, sf_dir)).write.mode("overwrite").parquet(path)
-        _STAGED_SIGS[key] = path
-    return path
+    return artifact(
+        spark, "sig_stage", sf_dir, ("documents",),
+        lambda tmp: shingle_signatures(_docs(spark, sf_dir)).write.parquet(tmp),
+        force,
+    )
 
 
 def staged_shingle_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -231,20 +191,14 @@ def stage_ngram_pairs(spark: SparkSession, sf_dir: str, force: bool = False) -> 
     band/join/verify pipeline — from the staged signature artifact, NOT a
     fresh md5 pass — which the bench uses so the stage cost stays measured
     instead of hidden). Returns the artifact path."""
-    from temporalvault_spark.staging import stage_dir
 
-    key = _corpus_key(spark, sf_dir)
-    path = _STAGED_PAIRS.get(key)
-    if path is None or force or not os.path.isdir(path):
-        if path is None or not os.path.isdir(path):
-            path = os.path.join(stage_dir(spark, "pairs_stage"), "pairs")
-        pairs = ngram_jaccard_pairs(
+    def build(tmp: str) -> None:
+        ngram_jaccard_pairs(
             _docs(spark, sf_dir),
             signatures=staged_shingle_signatures(spark, sf_dir),
-        )
-        pairs.write.mode("overwrite").parquet(path)
-        _STAGED_PAIRS[key] = path
-    return path
+        ).write.parquet(tmp)
+
+    return artifact(spark, "pairs_stage", sf_dir, ("documents",), build, force)
 
 
 def staged_ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -750,28 +704,23 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every apply pass reads the artifact. bpe_train_merges_1k (force=True)
 # benches the full 16-round train explicitly; token_count_bpe_1k benches
 # the APPLY cost that actually recurs.
-_STAGED_BPE_1K: dict[tuple, tuple[str, str]] = {}
 
 
 def stage_bpe_1k(spark: SparkSession, sf_dir: str, force: bool = False) -> tuple[str, str]:
     """Run the BPE_ROUNDS_FULL x 64 = 1024-merge iterative trainer once per
     application + corpus fingerprint; persist (merge table, word
-    segmentation) as parquet artifacts. Returns (merges_path, seg_path)."""
-    from temporalvault_spark.staging import stage_dir
+    segmentation) as ONE artifact of two parquet tables, swapped in
+    together. Returns (merges_path, seg_path)."""
 
-    key = _corpus_key(spark, sf_dir)
-    paths = _STAGED_BPE_1K.get(key)
-    if paths is None or force or not all(os.path.isdir(q) for q in paths):
-        if paths is None or not all(os.path.isdir(q) for q in paths):
-            root = stage_dir(spark, "bpe_stage")
-            paths = (os.path.join(root, "merges"), os.path.join(root, "seg"))
+    def build(tmp: str) -> None:
         merge_rows, seg = bpe_train_segment(
             _docs(spark, sf_dir), BPE_ROUNDS_FULL, BPE_MERGES_PER_ROUND
         )
-        _merge_table_df(spark, merge_rows).write.mode("overwrite").parquet(paths[0])
-        seg.write.mode("overwrite").parquet(paths[1])
-        _STAGED_BPE_1K[key] = paths
-    return paths
+        _merge_table_df(spark, merge_rows).write.parquet(f"{tmp}/merges")
+        seg.write.parquet(f"{tmp}/seg")
+
+    root = artifact(spark, "bpe_stage", sf_dir, ("documents",), build, force)
+    return f"{root}/merges", f"{root}/seg"
 
 
 @query("bpe_train_merges_1k", _bpe_merges_sql("duck"))

@@ -57,6 +57,7 @@ from temporalvault_spark.operators.llm import (
     shingle_signatures,
 )
 from temporalvault_spark.registry import query
+from temporalvault_spark.staging import artifact, artifact_path
 
 
 MIN_H_CHARS = 8  # a band minimum is an 8-hex-char digest slice
@@ -463,12 +464,10 @@ def q_dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     separately instead (minhash_index_build / dedup_incremental_probe
     below): at 100 TB only the probe recurs per batch, so one combined
     number conflates a one-time cost with the recurring one."""
-    from temporalvault_spark.staging import stage_dir
-
     docs = load_catalog(spark, sf_dir).table("documents")
     base = docs.filter(F.col("doc_id") % 10 != 0)
     batch = docs.filter(F.col("doc_id") % 10 == 0)
-    path = os.path.join(stage_dir(spark, "mh_incr"), "index")
+    path = artifact_path(spark, "mh_incr_selfcontained", sf_dir, ("documents",))
     build_minhash_index(base, path)
     return query_minhash_index(spark, path, batch)
 
@@ -480,32 +479,19 @@ def q_dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 100 TB, while minhash_index_build (force=True) benches the one-time
 # partitioned write explicitly.
 
-_STAGED_INDEX: dict[tuple, str] = {}
-
-
 def stage_incremental_index(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
     """Build (once per application + corpus fingerprint) the persisted band
     index over the base corpus (doc_id % 10 != 0), deriving from the staged
     signature artifact — no fresh md5 pass. Returns the index path."""
-    from temporalvault_spark.operators.llm import (
-        _corpus_key,
-        staged_shingle_signatures,
-    )
-    from temporalvault_spark.staging import stage_dir
+    from temporalvault_spark.operators.llm import staged_shingle_signatures
 
-    key = _corpus_key(spark, sf_dir)
-    path = _STAGED_INDEX.get(key)
-    if path is None or force or not os.path.isdir(path):
-        if path is None or not os.path.isdir(path):
-            path = os.path.join(stage_dir(spark, "mh_incr"), "index")
+    def build(tmp: str) -> None:
         docs = load_catalog(spark, sf_dir).table("documents")
-        base = docs.filter(F.col("doc_id") % 10 != 0)
-        sig = staged_shingle_signatures(spark, sf_dir).filter(
-            F.col("doc_id") % 10 != 0
-        )
-        build_minhash_index(base, path, signatures=sig)
-        _STAGED_INDEX[key] = path
-    return path
+        sig = staged_shingle_signatures(spark, sf_dir)
+        base = F.col("doc_id") % 10 != 0
+        build_minhash_index(docs.filter(base), tmp, signatures=sig.filter(base))
+
+    return artifact(spark, "mh_incr", sf_dir, ("documents",), build, force)
 
 
 _BUILD_ORACLE = f"""WITH {NGRAM_SKETCH_CTES}
@@ -538,8 +524,6 @@ def q_minhash_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 # build over the union (the rp_index_rebuild twin for this family).
 MH_REBUILD_WT = 300
 
-_MH_REBUILD_DIR: dict[tuple, str] = {}
-
 _REBUILD_ORACLE = f"""WITH {NGRAM_SKETCH_CTES},
     w AS (SELECT {_bkt_chars_case_sql("COUNT(*)", MH_REBUILD_WT)} AS c
           FROM sh)
@@ -559,22 +543,14 @@ def q_minhash_index_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     index via the explicit schema (bkt stays STRING) — the oracle's
     replayed width decision + counts prove rebuild-after-growth is
     byte-identical to never having grown."""
-    from temporalvault_spark.operators.llm import (
-        _corpus_key,
-        staged_shingle_signatures,
-    )
-    from temporalvault_spark.staging import stage_dir
+    from temporalvault_spark.operators.llm import staged_shingle_signatures
 
     docs = load_catalog(spark, sf_dir).table("documents")
     sig = staged_shingle_signatures(spark, sf_dir)
     # ONE private directory per corpus, reused across invocations (the
     # q_rp_index_rebuild precedent: bench best-of-2 must not pile up
     # abandoned index copies)
-    key = _corpus_key(spark, sf_dir)
-    path = _MH_REBUILD_DIR.get(key)
-    if path is None or not os.path.isdir(os.path.dirname(path)):
-        path = os.path.join(stage_dir(spark, "mh_rebuild"), "index")
-        _MH_REBUILD_DIR[key] = path
+    path = artifact_path(spark, "mh_rebuild", sf_dir, ("documents",))
     base = docs.filter(F.col("doc_id") % 10 != 0)
     batch = docs.filter(F.col("doc_id") % 10 == 0)
     build_minhash_index(

@@ -38,7 +38,6 @@ unchanged — the band value is just 16 bits instead of a hex slice).
 from __future__ import annotations
 
 import hashlib
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -49,6 +48,7 @@ from pyspark.sql import functions as F
 from temporalvault_spark.catalog import load_catalog
 from temporalvault_spark.operators.multimodal import decode_pixels_rgb
 from temporalvault_spark.registry import query
+from temporalvault_spark.staging import artifact
 
 IMG_SIDE = 16  # synthesized image edge (pixels)
 HASH_GRID = 8  # aHash grid -> 64 bits
@@ -274,26 +274,18 @@ def phash_hamming_pairs(
 
 # --- staged hash table (one decode+hash pass per session) --------------------
 
-_STAGED_PHASH: dict[tuple, str] = {}
-
-
 def stage_phash(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
     """Materialize the (img_id, hash64) table once per application + corpus
     fingerprint (the trade_edges_stage contract): synthesize the image
     corpus, decode+hash it, persist the slim hash frame. Consumers pay a
     parquet re-scan, never a re-decode."""
-    from temporalvault_spark.operators.llm import _corpus_key
-    from temporalvault_spark.staging import stage_dir
-
-    key = _corpus_key(spark, sf_dir)
-    path = _STAGED_PHASH.get(key)
-    if path is None or force or not os.path.isdir(path):
-        if path is None or not os.path.isdir(path):
-            path = os.path.join(stage_dir(spark, "phash_stage"), "hashes")
-        docs = load_catalog(spark, sf_dir).table("documents")
-        ahash_frame(synth_ppm_images(docs)).write.mode("overwrite").parquet(path)
-        _STAGED_PHASH[key] = path
-    return path
+    return artifact(
+        spark, "phash_stage", sf_dir, ("documents",),
+        lambda tmp: ahash_frame(synth_ppm_images(
+            load_catalog(spark, sf_dir).table("documents")
+        )).write.parquet(tmp),
+        force,
+    )
 
 
 # --- oracles: the full pixel->hash pipeline replayed in SQL ------------------

@@ -32,8 +32,6 @@ rp_lsh_index.rebuild_rp_index_if_grown.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -51,6 +49,7 @@ from temporalvault_spark.operators.phash import (
     _PHASH_CTES,
 )
 from temporalvault_spark.registry import query
+from temporalvault_spark.staging import artifact, artifact_path
 
 _FAMILY = Band64Index("phash", "img_id", "img")
 
@@ -128,29 +127,19 @@ def rebuild_phash_index_if_grown(
 # batch = each group's v == 0 image — every group guarantees cross-batch
 # near-dups, so the oracle rows are non-trivial by construction.
 
-_STAGED_PH_INDEX: dict[tuple, str] = {}
-
-
 def stage_phash_index(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
     """Build (once per application + corpus fingerprint) the persisted
     phash band index over the base images (variant != 0), deriving from
     the staged hash table — no re-decode."""
-    from temporalvault_spark.operators.llm import _corpus_key
     from temporalvault_spark.operators.phash import stage_phash
-    from temporalvault_spark.staging import stage_dir
 
-    key = _corpus_key(spark, sf_dir)
-    path = _STAGED_PH_INDEX.get(key)
-    if path is None or force or not os.path.isdir(path):
-        if path is None or not os.path.isdir(path):
-            path = os.path.join(stage_dir(spark, "ph_idx"), "index")
+    def build(tmp: str) -> None:
         hashes = spark.read.parquet(stage_phash(spark, sf_dir))
-        base = hashes.filter(
-            F.expr(f"(img_id DIV {IMG_EVERY}) % {VARIANT_GROUP} <> 0")
+        build_phash_index(
+            hashes.filter(F.expr(f"(img_id DIV {IMG_EVERY}) % {VARIANT_GROUP} <> 0")), tmp
         )
-        build_phash_index(base, path)
-        _STAGED_PH_INDEX[key] = path
-    return path
+
+    return artifact(spark, "ph_idx", sf_dir, ("documents",), build, force)
 
 
 _PH_BUILD_ORACLE = f"""WITH {_PHASH_CTES},
@@ -247,8 +236,6 @@ def q_phash_index_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # growth matrix that was unit-only).
 PH_REBUILD_WT = 40
 
-_PH_REBUILD_DIR: dict[tuple, str] = {}
-
 _PH_REBUILD_ORACLE = f"""WITH {_PHASH_CTES},
     w AS (SELECT {Band64Index.bkt_chars_case_sql("COUNT(*)", PH_REBUILD_WT)} AS c
           FROM ids),
@@ -273,18 +260,12 @@ def q_phash_index_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed width decision + counts prove rebuild-after-growth is
     byte-identical to never having grown. Completes the growth matrix:
     all THREE index families' maintenance cycles are value-hash-oracled."""
-    from temporalvault_spark.operators.llm import _corpus_key
     from temporalvault_spark.operators.phash import stage_phash
-    from temporalvault_spark.staging import stage_dir
 
     hashes = spark.read.parquet(stage_phash(spark, sf_dir))
     # ONE private directory per corpus, reused across invocations (bench
     # best-of-2 must not pile up abandoned index copies)
-    key = _corpus_key(spark, sf_dir)
-    path = _PH_REBUILD_DIR.get(key)
-    if path is None or not os.path.isdir(os.path.dirname(path)):
-        path = os.path.join(stage_dir(spark, "ph_rebuild"), "index")
-        _PH_REBUILD_DIR[key] = path
+    path = artifact_path(spark, "ph_rebuild", sf_dir, ("documents",))
     grp = F.expr(f"(img_id DIV {IMG_EVERY}) % {VARIANT_GROUP}")
     build_phash_index(hashes.filter(grp != 0), path)
     build_phash_index(hashes.filter(grp == 0), path, append=True)

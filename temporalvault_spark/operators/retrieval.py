@@ -113,11 +113,11 @@ def _bm25_base_cached(
     spark: SparkSession, sf_dir: str, terms: tuple[str, ...] = BM25_QUERY_TERMS
 ) -> DataFrame:
     """Session-staged bm25_base over the documents table, keyed on
-    (appId, dir, corpus mtime+size, terms) — llm._corpus_key's freshness
-    contract, so an in-process corpus rewrite restages."""
-    from temporalvault_spark.operators.llm import _corpus_key
+    (staging.fingerprint of the corpus, terms), so an in-process corpus
+    rewrite restages."""
+    from temporalvault_spark.staging import fingerprint
 
-    key = (*_corpus_key(spark, sf_dir), terms)
+    key = (*fingerprint(spark, sf_dir, ("documents",)), terms)
     base = _BM25_BASE_CACHE.get(key)
     if base is None:
         base = bm25_base(load_catalog(spark, sf_dir).table("documents"), terms)
@@ -167,9 +167,9 @@ def _bm25_idf_cached(
 ) -> dict[str, float]:
     """Session-cached idf literal map, derived from the cached base under
     the same freshness key."""
-    from temporalvault_spark.operators.llm import _corpus_key
+    from temporalvault_spark.staging import fingerprint
 
-    key = (*_corpus_key(spark, sf_dir), terms)
+    key = (*fingerprint(spark, sf_dir, ("documents",)), terms)
     idf = _BM25_IDF_CACHE.get(key)
     if idf is None:
         idf = _bm25_idf_literals(_bm25_base_cached(spark, sf_dir, terms), terms)

@@ -165,7 +165,7 @@ def rp_corpus_stats(emb: DataFrame) -> tuple[int, int]:
     return row["n"], row["d"] or 1
 
 
-# (appId, dir, "embeddings", mtime_ns, size) -> (n, dim): the bounded stats
+# staging.fingerprint over embeddings -> (n, dim): the bounded stats
 # read is a full corpus scan — repeated rp_lsh calls (and plan-only
 # explains) in one session must not each pay it (r8 advice), so registered
 # consumers cache it under the same freshness contract as _BM25_BASE_CACHE
@@ -175,9 +175,9 @@ _RP_STATS_CACHE: dict[tuple, tuple[int, int]] = {}
 def _rp_stats_cached(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
     import os
 
-    from temporalvault_spark.operators.llm import _corpus_key
+    from temporalvault_spark.staging import fingerprint
 
-    key = _corpus_key(spark, sf_dir, table="embeddings")
+    key = fingerprint(spark, sf_dir, ("embeddings",))
     got = _RP_STATS_CACHE.get(key)
     if got is None:
         # direct parquet read, not load_catalog: the stats need only this

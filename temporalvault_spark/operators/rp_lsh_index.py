@@ -45,8 +45,6 @@ machinery (minhash_index.rebuild_minhash_index_if_grown).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -80,6 +78,7 @@ from temporalvault_spark.operators.similarity import (
     EMB_STRICT_WHERE,
 )
 from temporalvault_spark.registry import query
+from temporalvault_spark.staging import artifact, artifact_path
 
 # Explicit read schemas (r9 advice): the bkt partition values are fixed-
 # width '0'/'1' strings, which Spark's partition-type inference reads back
@@ -392,26 +391,16 @@ def rebuild_rp_index_if_grown(
 # query benches ONLY the per-batch cost that recurs at 100 TB, while
 # rp_index_build (force=True) benches the one-time partitioned write.
 
-_STAGED_RP_INDEX: dict[tuple, str] = {}
-
-
 def stage_rp_index(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
     """Build (once per application + embeddings fingerprint) the persisted
     RP band index over the base corpus (vec_id % 10 != 0). Returns the
     index path."""
-    from temporalvault_spark.operators.llm import _corpus_key
-    from temporalvault_spark.staging import stage_dir
 
-    key = _corpus_key(spark, sf_dir, table="embeddings")
-    path = _STAGED_RP_INDEX.get(key)
-    if path is None or force or not os.path.isdir(path):
-        if path is None or not os.path.isdir(path):
-            path = os.path.join(stage_dir(spark, "rp_idx"), "index")
+    def build(tmp: str) -> None:
         emb = load_catalog(spark, sf_dir).table("embeddings")
-        base = emb.filter(F.col("vec_id") % 10 != 0)
-        build_rp_index(base, path)
-        _STAGED_RP_INDEX[key] = path
-    return path
+        build_rp_index(emb.filter(F.col("vec_id") % 10 != 0), tmp)
+
+    return artifact(spark, "rp_idx", sf_dir, ("embeddings",), build, force)
 
 
 def _sigs_union_duck(src: str) -> str:
@@ -545,8 +534,6 @@ def q_rp_index_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # appended index already equal to the fresh build).
 REBUILD_OCC_TARGET = 1
 
-_REBUILD_DIR: dict[tuple, str] = {}
-
 _REBUILD_ORACLE = f"""WITH e AS (
         SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings {EMB_STRICT_WHERE}),
     nb AS (SELECT {_bits_case_duck(REBUILD_OCC_TARGET)} AS bits
@@ -568,20 +555,13 @@ def q_rp_index_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     fires and the returned per-band counts come from the REBUILT on-disk
     index; the oracle's fresh-build replay over the union value-checks that
     rebuild-after-growth is byte-identical to never having grown at all."""
-    from temporalvault_spark.operators.llm import _corpus_key
-    from temporalvault_spark.staging import stage_dir
-
     emb = load_catalog(spark, sf_dir).table("embeddings")
     base = emb.filter(F.col("vec_id") % 10 != 0)
     batch = emb.filter(F.col("vec_id") % 10 == 0)
     # ONE private directory per corpus, reused across invocations (bench
     # best-of-2 and repeated sweeps would otherwise pile up a full
     # abandoned index copy per call until session teardown)
-    key = _corpus_key(spark, sf_dir, table="embeddings")
-    path = _REBUILD_DIR.get(key)
-    if path is None or not os.path.isdir(os.path.dirname(path)):
-        path = os.path.join(stage_dir(spark, "rp_rebuild"), "index")
-        _REBUILD_DIR[key] = path
+    path = artifact_path(spark, "rp_rebuild", sf_dir, ("embeddings",))
     build_rp_index(base, path)
     build_rp_index(batch, path, append=True)
     rebuild_rp_index_if_grown(spark, path, occ_target=REBUILD_OCC_TARGET)

@@ -971,9 +971,9 @@ _ASSIGN_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _assign_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from temporalvault_spark.operators.llm import _corpus_key
+    from temporalvault_spark.staging import fingerprint
 
-    key = _corpus_key(spark, sf_dir, table="embeddings")
+    key = fingerprint(spark, sf_dir, ("embeddings",))
     a = _ASSIGN_CACHE.get(key)
     if a is None:
         a = assign_with_norm(_emb(spark, sf_dir))
@@ -1735,12 +1735,10 @@ def q_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 CLUSTER_SAMPLE_K = 20
 
 
-# (appId, corpus fingerprint) -> staged path of the oracled 2-round Lloyd
-# ASSIGNMENT (vec_id, label, centroid_id) — the stage_phash contract:
-# consumers pay a parquet re-scan, never a re-train. cluster_kmeans_lloyd
-# stays the always-retrain measurement query; this artifact exists for the
-# riders (corpus_cluster_sample today).
-_STAGED_KMEANS_ASSIGN: dict[tuple, str] = {}
+# The staged oracled 2-round Lloyd ASSIGNMENT (vec_id, label, centroid_id)
+# — the stage_phash contract: consumers pay a parquet re-scan, never a
+# re-train. cluster_kmeans_lloyd stays the always-retrain measurement
+# query; this artifact exists for the riders (corpus_cluster_sample today).
 
 
 def stage_kmeans_assign(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
@@ -1748,25 +1746,15 @@ def stage_kmeans_assign(spark: SparkSession, sf_dir: str, force: bool = False) -
     corpus fingerprint. Integers and the untouched label column round-trip
     parquet exactly, so a rider's oracle can keep replaying the full
     training chain — the artifact IS that chain's output."""
-    import os
+    from temporalvault_spark.staging import artifact
 
-    from temporalvault_spark.operators.llm import _corpus_key
-    from temporalvault_spark.staging import stage_dir
-
-    key = _corpus_key(spark, sf_dir, table="embeddings")
-    path = _STAGED_KMEANS_ASSIGN.get(key)
-    if path is None or force or not os.path.isdir(path):
-        if path is None or not os.path.isdir(path):
-            path = os.path.join(stage_dir(spark, "kmeans_assign"), "assign")
+    def build(tmp: str) -> None:
         e = _emb(spark, sf_dir).select(
             "vec_id", "label", F.col("embedding").cast("array<double>").alias("e")
         )
         assigned, cents = kmeans_lloyd(e)
-        # main frame first: the root overwrite deletes `path` including any
-        # previous sidecar (the build_ivf_index write order)
-        assigned.select("vec_id", "label", "centroid_id").write.mode(
-            "overwrite"
-        ).parquet(path)
+        # main frame first: its write creates the directory the sidecar nests in
+        assigned.select("vec_id", "label", "centroid_id").write.parquet(tmp)
         # sidecar via ONE-slice parallelize, not coalesce(1) over a local-
         # data frame: kmeans_lloyd's cents frame parallelizes into
         # defaultParallelism Python partitions and coalesce then pays every
@@ -1779,9 +1767,9 @@ def stage_kmeans_assign(spark: SparkSession, sf_dir: str, force: bool = False) -
                 1,
             ),
             "centroid_id bigint, ce array<double>",
-        ).write.mode("overwrite").parquet(f"{path}/_centroids")
-        _STAGED_KMEANS_ASSIGN[key] = path
-    return path
+        ).write.parquet(f"{tmp}/_centroids")
+
+    return artifact(spark, "kmeans_assign", sf_dir, ("embeddings",), build, force)
 
 
 @query(

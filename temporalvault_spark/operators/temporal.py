@@ -91,29 +91,20 @@ def q_asof_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SNAP_TS = "2024-01-10 00:00:00"  # mid-range: 9 days of log become snapshot
 
-_SNAPSHOT_VAULTS: dict[tuple[str, str], str] = {}
-
-
 def snapshot_vault(spark: SparkSession, sf_dir: str):
-    """A vault seeded ONCE per (Spark application, sf_dir) with the
-    corpus's temporal_records — rows appended verbatim (ids, versions,
+    """A vault staged ONCE per Spark application + events fingerprint with
+    the corpus's temporal_records — rows appended verbatim (ids, versions,
     timestamps preserved), then a snapshot materialized at SNAP_TS. Every
     subsequent state_at() reads snapshot + pruned tail."""
-    import os as _os
-    import tempfile as _tempfile
-
+    from temporalvault_spark.staging import artifact
     from temporalvault_spark.vault import TemporalVault
 
-    key = (spark.sparkContext.applicationId, _os.path.normpath(sf_dir))
-    root = _SNAPSHOT_VAULTS.get(key)
-    if root is None:
-        root = _tempfile.mkdtemp(prefix="tv_snapvault_")
-        vault = TemporalVault(spark, root)
+    def build(tmp: str) -> None:
+        vault = TemporalVault(spark, tmp)
         vault._append(_tr(spark, sf_dir))
         vault.snapshot(SNAP_TS)
-        _SNAPSHOT_VAULTS[key] = root
-        return vault
-    return TemporalVault(spark, root)
+
+    return TemporalVault(spark, artifact(spark, "snapvault", sf_dir, ("events",), build))
 
 
 @query(

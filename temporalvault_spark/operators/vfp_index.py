@@ -18,8 +18,6 @@ directories and never re-reads the corpus."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,6 +36,7 @@ from temporalvault_spark.operators.videohash import (
     stage_vfp,
 )
 from temporalvault_spark.registry import query
+from temporalvault_spark.staging import artifact, artifact_path
 
 _FAMILY = Band64Index("vfp", "fid", "frame")
 
@@ -131,28 +130,19 @@ def rebuild_vfp_index_if_grown(
 # near-dups, so the oracle rows are non-trivial by construction (the
 # afp_index scenario, lifted to frame sequences).
 
-_STAGED_VFP_INDEX: dict[tuple, str] = {}
-
-
 def stage_vfp_index(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
     """Build (once per application + corpus fingerprint) the persisted
     video band index over the base videos' frames (variant != 0), derived
     from the staged fingerprint table — no re-decode."""
-    from temporalvault_spark.operators.llm import _corpus_key
-    from temporalvault_spark.staging import stage_dir
 
-    key = _corpus_key(spark, sf_dir)
-    path = _STAGED_VFP_INDEX.get(key)
-    if path is None or force or not os.path.isdir(path):
-        if path is None or not os.path.isdir(path):
-            path = os.path.join(stage_dir(spark, "vfp_idx"), "index")
+    def build(tmp: str) -> None:
         fps = spark.read.parquet(stage_vfp(spark, sf_dir))
-        base = fps.filter(
-            F.expr(f"(vid_id DIV {VID_EVERY}) % {VARIANT_GROUP} <> 0")
+        build_vfp_index(
+            _as_fid(fps.filter(F.expr(f"(vid_id DIV {VID_EVERY}) % {VARIANT_GROUP} <> 0"))),
+            tmp,
         )
-        build_vfp_index(_as_fid(base), path)
-        _STAGED_VFP_INDEX[key] = path
-    return path
+
+    return artifact(spark, "vfp_idx", sf_dir, ("documents",), build, force)
 
 
 # fid packing replayed in SQL — shared by every oracle below
@@ -239,8 +229,6 @@ def q_vfp_index_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # FIRES at test scale (production dial: 1M frames) — the afp_index twin
 VFP_REBUILD_WT = 200
 
-_VFP_REBUILD_DIR: dict[tuple, str] = {}
-
 _VFP_REBUILD_ORACLE = f"""WITH {_VFP_CTES},
     w AS (SELECT {Band64Index.bkt_chars_case_sql(f"COUNT(*) * {VID_FRAMES}", VFP_REBUILD_WT)} AS c
           FROM vids),
@@ -265,15 +253,8 @@ def q_vfp_index_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed width decision + counts prove rebuild-after-growth is
     byte-identical to never having grown. With this, all FIVE modalities'
     maintenance cycles are value-hash-oracled."""
-    from temporalvault_spark.operators.llm import _corpus_key
-    from temporalvault_spark.staging import stage_dir
-
     fps = spark.read.parquet(stage_vfp(spark, sf_dir))
-    key = _corpus_key(spark, sf_dir)
-    path = _VFP_REBUILD_DIR.get(key)
-    if path is None or not os.path.isdir(os.path.dirname(path)):
-        path = os.path.join(stage_dir(spark, "vfp_rebuild"), "index")
-        _VFP_REBUILD_DIR[key] = path
+    path = artifact_path(spark, "vfp_rebuild", sf_dir, ("documents",))
     grp = F.expr(f"(vid_id DIV {VID_EVERY}) % {VARIANT_GROUP}")
     build_vfp_index(_as_fid(fps.filter(grp != 0)), path)
     build_vfp_index(_as_fid(fps.filter(grp == 0)), path, append=True)

@@ -40,7 +40,6 @@ incrementally (frame position folds into the band key).
 from __future__ import annotations
 
 import hashlib
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -60,6 +59,7 @@ from temporalvault_spark.operators.phash import (
     hamming_expr,
 )
 from temporalvault_spark.registry import query
+from temporalvault_spark.staging import artifact
 
 VID_FRAMES = 6  # synthesized frames per clip
 VID_SIDE = 16  # frame edge (pixels) — the image tier's grid contract
@@ -257,26 +257,18 @@ def video_fp_pairs(
 
 # --- staged fingerprint table (one decode+hash pass per session) -------------
 
-_STAGED_VFP: dict[tuple, str] = {}
-
-
 def stage_vfp(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
     """Materialize the (vid_id, frame_idx, hash64) table once per
     application + corpus fingerprint (the stage_phash contract):
     synthesize the video corpus, decode+hash it, persist the slim frame.
     Consumers pay a parquet re-scan, never a re-decode."""
-    from temporalvault_spark.operators.llm import _corpus_key
-    from temporalvault_spark.staging import stage_dir
-
-    key = _corpus_key(spark, sf_dir)
-    path = _STAGED_VFP.get(key)
-    if path is None or force or not os.path.isdir(path):
-        if path is None or not os.path.isdir(path):
-            path = os.path.join(stage_dir(spark, "vfp_stage"), "fps")
-        docs = load_catalog(spark, sf_dir).table("documents")
-        vfp_frame(synth_gif_videos(docs)).write.mode("overwrite").parquet(path)
-        _STAGED_VFP[key] = path
-    return path
+    return artifact(
+        spark, "vfp_stage", sf_dir, ("documents",),
+        lambda tmp: vfp_frame(synth_gif_videos(
+            load_catalog(spark, sf_dir).table("documents")
+        )).write.parquet(tmp),
+        force,
+    )
 
 
 # --- oracles: the full pixel -> per-frame-hash pipeline replayed in SQL ------

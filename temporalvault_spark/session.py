@@ -18,8 +18,8 @@ RUNTIME_CONFS = {
     # timestamps; with a UTC session they round-trip bit-exact vs DuckDB.
     "spark.sql.session.timeZone": "UTC",
     # NOTE: spark.sql.shuffle.partitions is set DYNAMICALLY in tune() —
-    # 8 x the session's core count (see _shuffle_partitions) — not a
-    # constant here.
+    # max(cores, input_bytes / 128 MiB), capped at 65,536 (see
+    # _shuffle_partitions) — not a constant here.
     # AQE: runtime re-plan, skew-join splitting, partition coalescing.
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -65,10 +65,28 @@ SHUFFLE_TARGET_BYTES = 128 * 1024 * 1024
 SHUFFLE_PARTITIONS_CAP = 65_536
 
 
+def _env_shuffle_partitions() -> int | None:
+    """The ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` deployment dial, or ``None``
+    when unset. Anything but an integer > 0 raises — a typo must not
+    quietly become a default."""
+    env = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+    if not env:
+        return None
+    try:
+        n = int(env)
+    except ValueError:
+        n = 0
+    if n <= 0:
+        raise ValueError(
+            f"SPARK_GRAFT_SHUFFLE_PARTITIONS must be an integer > 0, got {env!r}"
+        )
+    return n
+
+
 def _shuffle_partitions(spark: SparkSession, input_bytes: int | None = None) -> int:
     """Scale-adaptive shuffle-partition count, derived from INPUT SIZE:
-    max(cores, input_bytes // 128 MiB), capped. ``SPARK_GRAFT_SHUFFLE_PARTITIONS``
-    overrides everything (the deployment dial).
+    max(cores, input_bytes // 128 MiB), capped. ``tune()`` lets
+    ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` override it (the deployment dial).
 
     History of this dial (it decided two round verdicts): a constant 32 was
     the r13 state — fast on the driver's box but a hard ceiling on any real
@@ -84,9 +102,6 @@ def _shuffle_partitions(spark: SparkSession, input_bytes: int | None = None) -> 
     coalescing (on) still shrinks any overshoot by actual bytes.
     ``input_bytes`` is supplied by the catalog (it knows the directory);
     session-only callers get the parallelism floor."""
-    env = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    if env:
-        return int(env)
     by_bytes = (input_bytes or 0) // SHUFFLE_TARGET_BYTES
     return max(spark.sparkContext.defaultParallelism, min(SHUFFLE_PARTITIONS_CAP, by_bytes))
 
@@ -96,15 +111,17 @@ def tune(spark: SparkSession, input_bytes: int | None = None) -> SparkSession:
     ``input_bytes`` (total catalog size, supplied by load_catalog) feeds the
     input-size-derived shuffle-partition dial."""
     confs = dict(RUNTIME_CONFS)
-    try:
-        confs["spark.sql.shuffle.partitions"] = str(
-            _shuffle_partitions(spark, input_bytes)
-        )
-    except Exception:
-        # A session without a usable SparkContext (e.g. Spark Connect) must
-        # still get the correctness-critical confs below (r14 advice) —
-        # fall back to a static default rather than raising out of tune().
-        confs["spark.sql.shuffle.partitions"] = "64"
+    # parsed outside the fallback below, so a bad dial raises
+    parts = _env_shuffle_partitions()
+    if parts is None:
+        try:
+            parts = _shuffle_partitions(spark, input_bytes)
+        except Exception:
+            # A session without a usable SparkContext (e.g. Spark Connect)
+            # must still get the correctness-critical confs below (r14
+            # advice) — fall back to a static default rather than raising.
+            parts = 64
+    confs["spark.sql.shuffle.partitions"] = str(parts)
     for k, v in confs.items():
         try:
             spark.conf.set(k, v)
@@ -120,16 +137,17 @@ def _ship_package(spark: SparkSession) -> None:
     the driver process's cwd/PYTHONPATH: Pandas-UDF/mapInPandas closures
     reference module-level functions, which cloudpickle serializes by
     reference — the worker must import the module. addPyFile with a zip of
-    the package is the runtime-settable way to guarantee that."""
-    sc = spark.sparkContext
-    if getattr(sc, "_temporalvault_shipped", False):
-        return
+    the package is the runtime-settable way to guarantee that. A session
+    without a SparkContext (Spark Connect) skips it."""
     import tempfile
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zip_path = os.path.join(tempfile.gettempdir(), "temporalvault_spark_pkg.zip")
     try:
+        sc = spark.sparkContext
+        if getattr(sc, "_temporalvault_shipped", False):
+            return
         with zipfile.ZipFile(zip_path, "w") as zf:
             for base, _dirs, files in os.walk(pkg_dir):
                 for fn in files:

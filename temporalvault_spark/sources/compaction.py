@@ -80,58 +80,26 @@ def compact_files(
     return plan
 
 
-# one fragment+compact cycle per (appId, sf_dir, source signature) — the
-# signature (mtimes+sizes of the events source) invalidates the staged copy
-# if the source is rewritten within one process, same freshness contract as
-# graph._edges_key / llm's staging caches; atexit reclaims the dirs
-_CompactKey = tuple[str, str, int, int]
-_COMPACT_CACHE: dict[_CompactKey, str] = {}
-
-
-def _compact_key(spark: SparkSession, sf_dir: str) -> _CompactKey:
-    p = os.path.join(sf_dir, "events.parquet")
-    mtime_ns, size = 0, 0
-    if os.path.isdir(p):
-        for root, _dirs, files in os.walk(p):
-            for fn in files:
-                st = os.stat(os.path.join(root, fn))
-                mtime_ns = max(mtime_ns, st.st_mtime_ns)
-                size += st.st_size
-    elif os.path.exists(p):
-        st = os.stat(p)
-        mtime_ns, size = st.st_mtime_ns, st.st_size
-    return (
-        spark.sparkContext.applicationId,
-        os.path.normpath(sf_dir),
-        mtime_ns,
-        size,
-    )
-
-
 def _compacted_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage the demo: fragment events into 64 trickle-sized files, then
-    compact them. Cached per session like layout._zorder_events_dir."""
-    import atexit
+    compact them — one staged copy per session + events fingerprint, like
+    layout._zorder_events_dir."""
     import shutil
-    import tempfile
 
     from temporalvault_spark.catalog import load_catalog
+    from temporalvault_spark.staging import artifact, stage_dir
 
-    key = _compact_key(spark, sf_dir)
-    path = _COMPACT_CACHE.get(key)
-    if path is None:
-        events = load_catalog(spark, sf_dir).table("events")
-        frag = tempfile.mkdtemp(prefix="tv_frag_events_")
-        out = tempfile.mkdtemp(prefix="tv_compact_events_")
-        events.repartition(64).write.mode("overwrite").parquet(frag)
+    def build(tmp: str) -> None:
+        frag = stage_dir(spark, "frag_events")
+        load_catalog(spark, sf_dir).table("events").repartition(64).write.mode(
+            "overwrite"
+        ).parquet(frag)
         # 1 MB target: at sf0.01 the 64 fragments total ~1 MB, so the plan
         # folds them into a single file — the 64:1 shape of a real OPTIMIZE
-        compact_files(spark, frag, out, target_bytes=1024 * 1024)
+        compact_files(spark, frag, tmp, target_bytes=1024 * 1024)
         shutil.rmtree(frag, ignore_errors=True)
-        _COMPACT_CACHE[key] = out
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
-        path = out
-    return path
+
+    return artifact(spark, "compact_events", sf_dir, ("events",), build)
 
 
 def q_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -62,16 +62,16 @@ def test_compact_shuffle_mode_balances(spark, frag_dir, tmp_path):
 
 def test_compact_cache_key_tracks_source_rewrites(spark, tmp_path):
     """The per-session compacted-copy cache must restage when the events
-    source is rewritten (same freshness contract as graph._edges_key)."""
+    source is rewritten (the staging.fingerprint freshness contract)."""
     import os
     import shutil
 
-    from temporalvault_spark.sources.compaction import _compact_key
+    from temporalvault_spark.staging import fingerprint
 
     d = str(tmp_path)
     shutil.copy("/root/testdata/sf0.001/events.parquet", f"{d}/events.parquet")
-    k1 = _compact_key(spark, d)
+    k1 = fingerprint(spark, d, ("events",))
     os.utime(f"{d}/events.parquet", ns=(1, 1))  # simulate rewrite
-    k2 = _compact_key(spark, d)
+    k2 = fingerprint(spark, d, ("events",))
     assert k1 != k2
     assert k1[0] == spark.sparkContext.applicationId

@@ -59,18 +59,18 @@ def test_pagerank_regular_graph_is_uniform(spark):
 
 def test_edges_stage_key_tracks_source_rewrites(spark, tmp_path):
     """The per-session edge-stage cache must restage when orders/lineitem
-    are rewritten (same freshness contract as llm._corpus_key)."""
+    are rewritten (the staging.fingerprint freshness contract)."""
     import os
     import shutil
 
-    from temporalvault_spark.operators.graph import _edges_key
+    from temporalvault_spark.staging import fingerprint
 
     d = str(tmp_path)
     for t in ("orders", "lineitem"):
         shutil.copy(f"/root/testdata/sf0.001/{t}.parquet", f"{d}/{t}.parquet")
-    k1 = _edges_key(spark, d)
+    k1 = fingerprint(spark, d, ("orders", "lineitem"))
     os.utime(f"{d}/lineitem.parquet", ns=(1, 1))  # simulate rewrite
-    k2 = _edges_key(spark, d)
+    k2 = fingerprint(spark, d, ("orders", "lineitem"))
     assert k1 != k2
     assert k1[0] == spark.sparkContext.applicationId
 

@@ -120,21 +120,21 @@ def test_rrf_rank_ties_break_on_doc_id(spark):
 
 def test_bm25_base_cache_tracks_corpus_rewrites(spark, tmp_path):
     """The session-staged BM25 base must restage when the documents source
-    is rewritten (same freshness contract as graph._edges_key and the
-    compaction cache)."""
+    is rewritten (the staging.fingerprint freshness contract shared with
+    every staged artifact)."""
     import os
     import shutil
 
-    from temporalvault_spark.operators.llm import _corpus_key
+    from temporalvault_spark.staging import fingerprint
 
     d = str(tmp_path)
     shutil.copy("/root/testdata/sf0.001/documents.parquet", f"{d}/documents.parquet")
-    k1 = (*_corpus_key(spark, d), ("a", "b"))
+    k1 = (*fingerprint(spark, d, ("documents",)), ("a", "b"))
     os.utime(f"{d}/documents.parquet", ns=(1, 1))  # simulate rewrite
-    k2 = (*_corpus_key(spark, d), ("a", "b"))
+    k2 = (*fingerprint(spark, d, ("documents",)), ("a", "b"))
     assert k1 != k2
     # and distinct term tuples never share an entry
-    k3 = (*_corpus_key(spark, d), ("a", "c"))
+    k3 = (*fingerprint(spark, d, ("documents",)), ("a", "c"))
     assert k2 != k3
 
 

@@ -121,17 +121,17 @@ def test_rp_stats_cache_tracks_embedding_rewrites(spark, tmp_path):
     import os
     import shutil
 
-    from temporalvault_spark.operators.llm import _corpus_key
     from temporalvault_spark.operators.rp_lsh import (
         _RP_STATS_CACHE,
         _rp_stats_cached,
     )
+    from temporalvault_spark.staging import fingerprint
 
     d = str(tmp_path)
     shutil.copy("/root/testdata/sf0.001/embeddings.parquet", f"{d}/embeddings.parquet")
     n1, dim1 = _rp_stats_cached(spark, d)
     assert n1 > 0 and dim1 > 0
-    k1 = _corpus_key(spark, d, table="embeddings")
+    k1 = fingerprint(spark, d, ("embeddings",))
     assert _RP_STATS_CACHE[k1] == (n1, dim1)
     # same fingerprint -> cache hit (poison the entry and observe it served)
     _RP_STATS_CACHE[k1] = (n1 + 7, dim1)
@@ -139,6 +139,6 @@ def test_rp_stats_cache_tracks_embedding_rewrites(spark, tmp_path):
     _RP_STATS_CACHE[k1] = (n1, dim1)
     # rewrite (mtime bump) -> fresh key -> fresh scan
     os.utime(f"{d}/embeddings.parquet", ns=(1, 1))
-    k2 = _corpus_key(spark, d, table="embeddings")
+    k2 = fingerprint(spark, d, ("embeddings",))
     assert k2 != k1
     assert _rp_stats_cached(spark, d) == (n1, dim1)
